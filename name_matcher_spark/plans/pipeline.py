@@ -132,27 +132,30 @@ def run_linkage(
     # run_stage materializes the result to parquet and returns the
     # re-read checkpoint, so those cache entries are dead the moment
     # the stage completes — collect them via the `pins` hook and drop
-    # them, or a long-lived session issuing many run_linkage calls
-    # accumulates cache entries without bound (the same contract the
-    # streaming micro-batch loop follows, streaming/linkage.py).
+    # them, whether the stage succeeds or raises, or a long-lived
+    # session issuing many run_linkage calls accumulates cache entries
+    # without bound (the same contract the streaming micro-batch loop
+    # follows, streaming/linkage.py).
     pins: list[DataFrame] = []
-    pairs = ckpt.run_stage(
-        "pairs_fuzzy",
-        lambda: match_fuzzy(
-            pa,
-            pb,
-            include_middle=cfg.include_middle,
-            blocking=cfg.blocking,
-            max_block_rows=cfg.max_block_rows,
-            pins=pins,
-        ),
-        score_col="confidence",
-        inputs=["prepare_a", "prepare_b", "config"],
-        input_fingerprints={"config": cfg_fp},
-        force=force,
-    )
-    for df in pins:
-        df.unpersist()
+    try:
+        pairs = ckpt.run_stage(
+            "pairs_fuzzy",
+            lambda: match_fuzzy(
+                pa,
+                pb,
+                include_middle=cfg.include_middle,
+                blocking=cfg.blocking,
+                max_block_rows=cfg.max_block_rows,
+                pins=pins,
+            ),
+            score_col="confidence",
+            inputs=["prepare_a", "prepare_b", "config"],
+            input_fingerprints={"config": cfg_fp},
+            force=force,
+        )
+    finally:
+        for df in pins:
+            df.unpersist()
     out["pairs_fuzzy"] = pairs
 
     if "households" in cfg.stages:

@@ -3,20 +3,33 @@
 Defaults encode the scale posture required at 100 TB: AQE on (runtime
 join-side selection + skew-join splitting replaces the reference's
 hand-rolled "count both tables, index the smaller" heuristic,
-src/matching/mod.rs:3400-3403), Arrow transfer on (all scoring kernels
-are pandas UDFs over Arrow batches), and shuffle partitions sized for
-the local harness but overridable for a real cluster.
+src/matching/mod.rs:3400-3403), JVM scoring kernels registered from
+the kernel jar (Jaro-Winkler, normalize, Soundex, Double Metaphone run
+as Java UDFs inside whole-stage codegen), Arrow transfer on for the
+batch-wise Python stages that remain (media decoding in
+``mapInPandas``, the pandas-UDF fallbacks, the oracle's phonetic
+sidecar), a codegen cache sized to the engine's working set, and shuffle
+partitions sized for the local harness but overridable for a real
+cluster.
 """
 
 from __future__ import annotations
 
+import logging
 import os
 import tempfile
 from pathlib import Path
 
 from pyspark.sql import SparkSession
 
+log = logging.getLogger(__name__)
+
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("NMS_SHUFFLE_PARTITIONS", "32"))
+
+# Codegen cache size: why and how it was measured is at the builder
+# line in get_spark that sets it.
+CODEGEN_CACHE_CONF = "spark.sql.codegen.cache.maxEntries"
+CODEGEN_CACHE_ENTRIES = 2000
 
 # Directory containing the name_matcher_spark package — Python workers
 # deserialize our pandas UDFs and must be able to import it regardless
@@ -94,7 +107,7 @@ def get_spark(
         # are orders of magnitude above either bound, so this only
         # affects the small-input tail.
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-        # Arrow channel for every pandas UDF (scoring kernels).
+        # Arrow channel for the pandas UDFs and mapInPandas stages.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.shuffle.partitions", str(n_shuffle))
@@ -105,6 +118,30 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         .config("spark.executorEnv.PYTHONPATH", pythonpath)
+        # Janino-compiled whole-stage classes are cached per JVM in an LRU
+        # of this many entries (Spark's default is 100). One pass of
+        # run_linkage or of the crawl composition generates more distinct
+        # classes than that (~180 and ~250), so at 100 every class is
+        # evicted before the next pass needs it and each warm pass
+        # recompiles all of them, then pays HotSpot to JIT the fresh
+        # bytecode again. Working set, measured with an unbounded cache at
+        # sf0.01 on 4 cores: one sweep of bench.BENCH_QUERIES compiles 531
+        # distinct classes, one registry sweep in the same session adds
+        # 557 (1,088 together), and a second bench sweep adds 10. 2000
+        # leaves ~1.8x headroom over both sweeps. Classes average 3.6 KB
+        # of bytecode (max 191 KB), so a full cache is ~7 MB.
+        # Static SQL conf: it only applies when the session (and the JVM's
+        # CodeGenerator) is first built, so it lives on the builder.
+        .config(CODEGEN_CACHE_CONF, str(CODEGEN_CACHE_ENTRIES))
+        # The codegen cache is keyed by source text, and by default the
+        # class name carries the whole-stage id. AQE numbers stages in
+        # the order they are created, which follows which shuffle
+        # finished first, so the same pipeline comes back under another
+        # id on a later pass and misses the cache. Id-free names make a
+        # warm run_linkage pass compile nothing (it compiled 0-12
+        # classes otherwise); the id stays in the code's comment and in
+        # explain output.
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     jar = _ensure_udf_jar()
     if jar:
@@ -113,12 +150,40 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    _warn_small_codegen_cache(spark)
     # Always attempt JVM-kernel registration: the class may come from
     # the locally-built jar OR from `spark-submit --jars` (where the
     # tools/ build helper isn't shipped). Both failures are caught and
     # flip the pandas-UDF fallback flags.
     _register_jvm_udfs(spark)
     return spark
+
+
+def _warn_small_codegen_cache(spark: SparkSession) -> None:
+    """A reused session keeps the static conf it was built with, so the
+    cache size get_spark asks for silently does not apply: say so once."""
+    entries = int(spark.conf.get(CODEGEN_CACHE_CONF))
+    if entries < CODEGEN_CACHE_ENTRIES:
+        log.warning(
+            "%s is %d, below the engine default of %d: every pass will "
+            "recompile its generated code. It is a static conf; set it "
+            "before the first SparkSession of this JVM is built.",
+            CODEGEN_CACHE_CONF,
+            entries,
+            CODEGEN_CACHE_ENTRIES,
+        )
+
+
+def codegen_stats(spark: SparkSession) -> dict:
+    """JVM-wide Janino compile count and total compile time so far.
+    Take the difference of two calls to measure a run."""
+    jvm = spark._jvm
+    metrics = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    codegen = jvm.org.apache.spark.sql.catalyst.expressions.codegen
+    return {
+        "compiles": metrics.METRIC_COMPILATION_TIME().getCount(),
+        "compile_s": codegen.CodeGenerator.compileTime() / 1e9,
+    }
 
 
 def _ensure_udf_jar() -> str | None:

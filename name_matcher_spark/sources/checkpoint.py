@@ -226,8 +226,11 @@ class StageCheckpoint:
                 .orderBy("bucket")
                 .collect()
             )
+            # NULL scores are counted under the key "null": the data is
+            # already committed here, so raising on them would leave a
+            # finished stage with no manifest.
             manifest["score_histogram"] = {
-                str(r["bucket"] / 10.0): r["count"] for r in hist
+                "null" if b is None else str(b / 10.0): n for b, n in hist
             }
 
         self._store_manifest(stage, manifest)

@@ -26,6 +26,10 @@ def _collect_sorted(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+def _n_cached(spark) -> int:
+    return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+
 def test_full_pipeline_and_resume(spark, corpus, tmp_path):
     pages_a, pages_b = corpus
     work = str(tmp_path / "wd")
@@ -204,20 +208,17 @@ def test_repeated_batch_calls_leave_no_cache_entries(spark, tmp_path):
     pa = prepare_persons(spark.createDataFrame(a_pd))
     pb = prepare_persons(spark.createDataFrame(b_pd))
 
-    def n_cached() -> int:
-        return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-
     # No-GROWTH, not equality: in a shared session Spark's
     # ContextCleaner also releases dead entries from earlier tests
     # concurrently, so the count can legitimately DROP below base.
-    base = n_cached()
+    base = _n_cached(spark)
     for _ in range(3):
         pins: list = []
         assert match_fuzzy(pa, pb, include_middle=False, pins=pins).count() > 0
         assert pins, "match_fuzzy should have pinned its tables"
         for df in pins:
             df.unpersist(blocking=True)
-        assert n_cached() <= base
+        assert _n_cached(spark) <= base
 
     # run_linkage drains its own pins once the pairs_fuzzy checkpoint
     # materializes; two full builds (distinct work dirs) -> no growth.
@@ -229,4 +230,49 @@ def test_repeated_batch_calls_leave_no_cache_entries(spark, tmp_path):
             persons_b=spark.createDataFrame(b_pd),
             config=cfg,
         )
-        assert n_cached() <= base
+        assert _n_cached(spark) <= base
+
+
+def test_null_score_gets_its_own_histogram_key(spark, tmp_path):
+    """A NULL in the score column is counted under the explicit "null"
+    key. It used to raise (None / 10.0) after the parquet commit, so the
+    stage's data was written and its manifest never was."""
+    from name_matcher_spark.sources.checkpoint import StageCheckpoint
+
+    ck = StageCheckpoint(spark, str(tmp_path))
+    df = spark.createDataFrame(
+        [(1, 0.97), (2, None)], "id long, confidence double"
+    )
+    ck.write("scored", df, score_col="confidence")
+    assert ck.manifest("scored")["score_histogram"] == {"null": 1, "0.9": 1}
+    assert ck.is_complete("scored")
+
+
+def test_failed_fuzzy_stage_releases_pins(spark, tmp_path, monkeypatch):
+    """match_fuzzy's persisted prepared and key tables are released
+    even when the pairs_fuzzy stage raises: a long-lived session that
+    retries failing runs must not keep them pinned."""
+    from name_matcher_spark.sources.checkpoint import StageCheckpoint
+
+    a_pd, b_pd, _ = make_dirty(200)
+
+    write = StageCheckpoint._write_data
+
+    def failing_write(self, stage, df):
+        out = write(self, stage, df)  # the pinned tables materialize
+        if stage == "pairs_fuzzy":
+            raise OSError("commit failed")
+        return out
+
+    monkeypatch.setattr(StageCheckpoint, "_write_data", failing_write)
+    base = _n_cached(spark)
+    with pytest.raises(OSError, match="commit failed"):
+        run_linkage(
+            spark, str(tmp_path / "wd"),
+            persons_a=spark.createDataFrame(a_pd),
+            persons_b=spark.createDataFrame(b_pd),
+            config=LinkageConfig(stages=("pairs_fuzzy",)),
+        )
+    # No-growth, as in the test above: the ContextCleaner may also
+    # release earlier tests' dead entries meanwhile.
+    assert _n_cached(spark) <= base

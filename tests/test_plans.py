@@ -6,6 +6,7 @@ viable at 100 TB, asserted on the actual executed plans.
 - exact joins and dedup/text paths contain ZERO Python nodes
 - the fuzzy scoring plan evaluates the JW kernel exactly once
 - whole-stage codegen wraps the relational sections
+- a warm pass reuses its generated classes instead of recompiling
 """
 
 from __future__ import annotations
@@ -243,6 +244,60 @@ def test_session_keeps_compute_dense_shuffles_wide(spark):
         "spark.sql.adaptive.coalescePartitions.minPartitionSize"
     ) == "64k"
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+
+
+def test_warm_linkage_pass_compiles_nothing(spark, tmp_path):
+    """Codegen-cache gate: a second run_linkage on the same session, into
+    a fresh work dir, finds every whole-stage class in the codegen cache.
+    One pass generates more classes than Spark's default 100-entry cache
+    holds, so without the session's larger cache every warm pass
+    recompiles all of them."""
+    from name_matcher_spark.fixtures.pages import make_pages
+    from name_matcher_spark.fixtures.persons import make_dirty
+    from name_matcher_spark.plans.pipeline import run_linkage
+    from name_matcher_spark.session import codegen_stats
+
+    a_pd, b_pd, _ = make_dirty(300)
+    pages_a = spark.createDataFrame(make_pages(a_pd, "a")).drop("expected_entity")
+    pages_b = spark.createDataFrame(make_pages(b_pd, "b")).drop("expected_entity")
+    run_linkage(spark, str(tmp_path / "cold"), pages_a=pages_a, pages_b=pages_b)
+    before = codegen_stats(spark)["compiles"]
+    run_linkage(spark, str(tmp_path / "warm"), pages_a=pages_a, pages_b=pages_b)
+    assert codegen_stats(spark)["compiles"] - before == 0
+
+
+def test_reused_session_with_small_codegen_cache_warns(spark, caplog):
+    """The codegen cache size is a static conf: a session built without
+    it keeps Spark's 100 entries, and get_spark must say so once instead
+    of running slow silently. Reusing a properly built session is quiet."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    from name_matcher_spark.session import get_spark
+
+    with caplog.at_level("WARNING", logger="name_matcher_spark.session"):
+        get_spark(app_name="nms-tests", master="local[4]", shuffle_partitions=8)
+    assert not caplog.records
+
+    script = (
+        "from pyspark.sql import SparkSession\n"
+        "SparkSession.builder.master('local[1]')"
+        ".config('spark.ui.enabled', 'false').getOrCreate()\n"
+        "from name_matcher_spark.session import get_spark\n"
+        "get_spark(master='local[1]').stop()\n"
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=Path(__file__).resolve().parents[1],
+        capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    warnings = [
+        ln for ln in proc.stderr.splitlines()
+        if "spark.sql.codegen.cache.maxEntries is 100" in ln
+    ]
+    assert len(warnings) == 1, proc.stderr[-2000:]
 
 
 def test_new_round4_text_operators_plan_quality(spark):

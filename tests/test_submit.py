@@ -89,6 +89,10 @@ def test_spark_submit_pyfiles_end_to_end(tmp_path):
     assert summary["stages"]["clusters"] > 0
     assert summary["n_partitions"] >= 1
     assert summary["score_histogram"], "manifest must carry the score histogram"
+    # A fresh JVM compiles every whole-stage class it runs; the summary
+    # must show that work so a thrashing codegen cache is visible.
+    assert summary["codegen"]["compiles"] > 0
+    assert summary["codegen"]["compile_s"] > 0
     for stage in ("pairs_fuzzy", "households", "clusters"):
         assert (tmp_path / "out" / f"{stage}.parquet" / "_SUCCESS").exists()
 

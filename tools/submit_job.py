@@ -27,7 +27,8 @@ Every stage (extract, prepare, blocked fuzzy scoring, households,
 clusters) checkpoints to --work-dir with a lineage manifest
 (per-partition row counts + confidence histogram), so a killed run
 resumes from the last completed stage. Final outputs land under --out
-and a one-line JSON summary is printed for the submitting harness.
+and a one-line JSON summary is printed for the submitting harness; its
+"codegen" entry counts the run's Janino compiles and compile seconds.
 
 Mirrors the reference's CLI flow (src/bin/cli.rs) re-expressed as a
 spark-submit job; resumability contract from src/util/checkpoint.rs.
@@ -170,6 +171,20 @@ def run_stream(spark, args) -> dict:
     }
 
 
+def _codegen_since(spark, start: dict) -> dict:
+    """Janino compiles and compile seconds since ``start``. A fresh JVM
+    compiles each distinct generated class once; a count far above
+    that, or compile seconds a large share of the wall time, means the
+    codegen cache is thrashing."""
+    from name_matcher_spark.session import codegen_stats
+
+    now = codegen_stats(spark)
+    return {
+        "compiles": now["compiles"] - start["compiles"],
+        "compile_s": round(now["compile_s"] - start["compile_s"], 3),
+    }
+
+
 def main(argv: list[str] | None = None) -> int:
     args = parse_args(argv)
     if (
@@ -180,16 +195,18 @@ def main(argv: list[str] | None = None) -> int:
         raise SystemExit("need exactly one of --pages-a/--pages-b or --persons-a/--persons-b (both sides)")
 
     from name_matcher_spark.plans.pipeline import LinkageConfig, run_linkage
-    from name_matcher_spark.session import get_spark
+    from name_matcher_spark.session import codegen_stats, get_spark
 
     # "inherit": respect spark-submit's --master / cluster manager.
     spark = get_spark(app_name="nms-linkage", master="inherit")
     t0 = time.time()
+    cg0 = codegen_stats(spark)
 
     if args.stream:
         if not args.pages_a:
             raise SystemExit("--stream requires --pages-a (stream dir) and --pages-b (reference)")
         summary = run_stream(spark, args)
+        summary["codegen"] = _codegen_since(spark, cg0)
         summary["wall_sec"] = round(time.time() - t0, 3)
         print(json.dumps(summary))
         return 0
@@ -258,6 +275,7 @@ def main(argv: list[str] | None = None) -> int:
         summary["manifest_rows"] = spark.table(
             f"{args.ckpt_tables}_manifest"
         ).count()
+    summary["codegen"] = _codegen_since(spark, cg0)
     summary["wall_sec"] = round(time.time() - t0, 3)
     print(json.dumps(summary))
     return 0
