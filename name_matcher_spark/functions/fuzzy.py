@@ -30,46 +30,6 @@ CASE2 = "CASE 2"
 CASE3 = "CASE 3"
 
 
-# Set True by session._register_jvm_udfs when the fused Java ladder
-# kernel (javaudf/NmsFuzzyScore.java) is registered.
-JVM_FUSED_ENABLED = False
-
-
-def _score_fused_jvm(
-    pairs: DataFrame, include_middle: bool, lp: str, rp: str
-) -> DataFrame:
-    """One fused JVM kernel call per pair (lev + jw + metaphone +
-    ladder inside NmsFuzzyScore.java); the explode(array(...)) Generate
-    node guarantees single evaluation despite the result being
-    referenced by filter and three projections."""
-    k = F.explode(
-        F.array(
-            F.call_udf(
-                "nms_fuzzy_score",
-                F.col(f"{lp}full"),
-                F.col(f"{rp}full"),
-                F.col(f"{lp}dmeta"),
-                F.col(f"{rp}dmeta"),
-                F.col(f"{lp}simple_first"),
-                F.col(f"{rp}simple_first"),
-                F.col(f"{lp}simple_middle"),
-                F.col(f"{rp}simple_middle"),
-                F.col(f"{lp}simple_last"),
-                F.col(f"{rp}simple_last"),
-                F.lit(include_middle),
-            )
-        )
-    )
-    return (
-        pairs.select("*", k.alias("_k"))
-        .filter(F.col("_k").isNotNull())
-        .withColumn("match_case", F.col("_k.label"))
-        .withColumn("score", F.col("_k.score"))
-        .withColumn("confidence", F.col("score") / 100.0)
-        .drop("_k")
-    )
-
-
 def metaphone_pct_col(code1: Column, code2: Column) -> Column:
     """100 iff primary metaphone codes are non-empty and equal (mod.rs:96-98).
 
@@ -122,9 +82,6 @@ def score_candidate_pairs(
         # inner join: non-matching tuples (dropped by the ladder) drop
         # their pairs too, exactly like direct scoring.
         return pairs.join(scored_uniq, on=in_cols, how="inner")
-
-    if JVM_FUSED_ENABLED:
-        return _score_fused_jvm(pairs, include_middle, lp, rp)
 
     lev = lev_pct_col(full1, full2)
     jw = jw_pct_expr(full1, full2)

@@ -22,7 +22,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .functions.similarity import jw_pct_expr, lev_pct_col
-from .operators.clustering import cluster_pairs
+from .operators.clustering import (
+    cluster_pairs,
+    connected_components_bigstar,
+    decode_components,
+    encode_edges,
+)
 from .operators.dedup import (
     exact_duplicates,
     minhash_lsh_candidates,
@@ -1095,12 +1100,13 @@ def lk_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def lk_clusters_bigstar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same clustering contract via the large-star/small-star
-    contraction (O(log n) rounds — the adversarial-diameter scale
-    path); must match the identical recursive-CTE oracle."""
+    contraction run from the start, without the propagation phase
+    (O(log n) rounds — the adversarial-diameter scale path); must match
+    the identical recursive-CTE oracle."""
     pa = prepare_persons(persons_a(spark, sf_dir))
     pb = prepare_persons(persons_b(spark, sf_dir))
     pairs = match_algo1(pa, pb)
-    return cluster_pairs(pairs, threshold=0.95, method="bigstar")
+    return decode_components(connected_components_bigstar(encode_edges(pairs, 0.95)))
 
 
 def lk_stream_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3632,7 +3638,8 @@ def wp_crawl_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     a struct-max survivor (map-side combine); the survivor-content
     resolve is an equi-join on the kept raw URL; the dedup tiers are
     the audited dedup_pipeline plan (never all-pairs); linkage is the
-    blocked equi-join; clustering is O(diameter) label propagation.
+    blocked equi-join; clustering is a few label-propagation rounds,
+    handing any long chain to O(log n)-round contraction.
     The stage boundaries every downstream consumer shares (deduped
     page set, extracted entities, dedup disposition, match pairs) are
     localCheckpoint-materialized — run_linkage's stage discipline:

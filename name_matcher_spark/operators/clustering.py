@@ -1,93 +1,93 @@
 """Transitive clustering: connected components over the match-pair graph.
 
 The reference stops at best-match argmax; BASELINE.json's north rule
-adds transitive closure into entity clusters. Two methods, same
-contract (GraphFrames is not available in this environment):
+adds transitive closure into entity clusters. One entry point,
+``connected_components``, with one contract: every node is labeled
+with the smallest node id of its component (GraphFrames is not
+available in this environment).
 
-* ``propagate`` — iterative min-label propagation, one shuffle per
-  round, O(diameter) rounds. Linkage graphs are star-like around base
-  records (small diameter), so this is the right cost model for the
-  common case and the cheapest per round.
-* ``bigstar`` — alternating large-star/small-star contraction (the
-  published MapReduce-CC scheme of Kiveris et al., "Connected
-  Components in MapReduce and Beyond", SoCC'14): O(log n) rounds
-  regardless of diameter. The scale path for adversarial inputs —
-  long duplicate chains (serial re-crawls, chained aliases) where
-  propagation would take hundreds of rounds.
+It runs in two phases:
 
-Each round localCheckpoints so plans don't grow exponentially.
+* min-label propagation, one shuffle per round, for at most
+  ``PROPAGATE_ROUNDS`` rounds. Linkage and dedup graphs are star-like
+  around base records, so they converge in 1-3 rounds, and a round is
+  the cheapest step there is.
+* if labels are still changing after those rounds, the current labels
+  are handed to large-star/small-star contraction (Kiveris et al.,
+  "Connected Components in MapReduce and Beyond", SoCC'14) as star
+  edges ``(node, label)`` next to the graph's edges. Each label lies in
+  its node's component, so the components do not change, and the
+  contraction needs O(log n) rounds whatever the diameter: long
+  duplicate chains (serial re-crawls, chained aliases) where
+  propagation alone would take hundreds of rounds.
+
+Contraction alone was about 2x slower on the benchmark's graphs (at
+least 2 rounds of ~5 shuffles each, against 1-3 one-shuffle
+propagation rounds), which is why propagation goes first. Neither phase
+exits quietly: contraction raises ``RuntimeError`` at its round cap.
+
+Each round localCheckpoints so plans don't grow exponentially, and
+releases the round before it once it has materialized; only the
+returned labels stay persisted.
 """
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+log = logging.getLogger(__name__)
+
+# Propagation rounds before the handoff to contraction. The benchmark's
+# graphs converge in 1-3; a chain of n nodes needs about n.
+PROPAGATE_ROUNDS = 8
+# Contraction needs O(log n) rounds, so reaching this cap means a bug.
+CONTRACT_ROUNDS = 40
+
+
+def release_checkpoints(df: DataFrame) -> None:
+    """Unpersist the ``localCheckpoint`` blocks that ``df`` reads (the
+    RDD leaves of its plan). Call it once nothing reads ``df`` again."""
+    leaves = df._jdf.queryExecution().logical().collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() == "LogicalRDD":
+            leaf.rdd().unpersist(False)
+
 
 def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 25,
+    edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
     """edges(src: long, dst: long) -> (node: long, cluster_id: long)
     where cluster_id = min node id in the component. Isolated nodes
-    (absent from edges) are the caller's concern."""
+    (absent from edges) are the caller's concern; a self-loop makes a
+    singleton component. Logs one record per call with the rounds each
+    phase ran and whether propagation handed off."""
     e = edges.select(
         F.col(src).cast("long").alias("src"), F.col(dst).cast("long").alias("dst")
     ).filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-    # Undirected: keep both directions once, dedup. Eager checkpoint
-    # (r06): materializing the edge table up front tells us its size,
-    # and the loop below re-plans every round, so the one extra
-    # scheduler round trip buys a SCALE-ADAPTIVE partition count for
-    # all O(diameter) round jobs (guide §2: partitioning derived from
-    # input size, not a constant tuned for either local mode or the
-    # cluster).
+    # Undirected: keep both directions once. Materialized by round 1.
     bidir = (
         e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .distinct()
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
-    n_edges = bidir.count()  # metadata-cheap: already materialized
-
-    # The loop's tables are a few 16-byte columns per edge; at the
-    # session's shuffle-partition setting every round pays task count,
-    # not data (measured: 150k-pair linkage loop 2.7-4.1 s at 32
-    # partitions vs 1.1-1.6 s sized to the data). Derive the loop's
-    # partition count from the edge count (~250k edge rows per task),
-    # clamped by the session setting so large graphs keep full
-    # parallelism — the session conf is restored before returning, and
-    # the returned labels are an already-materialized checkpoint, so
-    # nothing downstream inherits the override.
-    spark = bidir.sparkSession
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    loop_parts = max(1, min(int(old_parts), -(-n_edges // 250_000)))
-
     # Initial labels: min over the CLOSED 1-hop neighborhood, not the
     # node itself (r06). The node universe needs a groupBy on src
     # either way (bidir is symmetric, so every node appears as src);
     # folding min(dst) into that same aggregate performs round 1 of
-    # min-label propagation for free — the loop below then starts from
-    # the 1-hop state and converges exactly one round (= one full
-    # shuffle job) earlier on every graph. Same fixpoint, same labels:
-    # the iteration new[v] = min(old[v], min over neighbors) reaches
-    # the identical component-min labeling from either start.
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-        return _propagate_loop(bidir, max_iter)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-
-
-def _propagate_loop(bidir: DataFrame, max_iter: int) -> DataFrame:
+    # min-label propagation for free. Same fixpoint, same labels.
     labels = (
         bidir.groupBy(F.col("src").alias("node"))
         .agg(F.min("dst").alias("_mn"))
         .select("node", F.least(F.col("_mn"), F.col("node")).alias("cluster_id"))
         .localCheckpoint(eager=False)
     )
-
-    for _ in range(max_iter):
+    rounds, changed = 0, True
+    while changed and rounds < PROPAGATE_ROUNDS:
+        rounds += 1
         # One aggregation computes both the new label and whether it
         # changed: self rows carry the old label flagged, neighbor rows
         # carry candidate labels; changed <=> min(all) < min(self).
@@ -101,7 +101,7 @@ def _propagate_loop(bidir: DataFrame, max_iter: int) -> DataFrame:
         merged = neighbor_labels.union(
             labels.select("node", "cluster_id", F.lit(True).alias("is_self"))
         )
-        new_labels = (
+        step = (
             merged.groupBy("node")
             .agg(
                 F.min("cluster_id").alias("cluster_id"),
@@ -116,10 +116,29 @@ def _propagate_loop(bidir: DataFrame, max_iter: int) -> DataFrame:
         # limit — a partial action must not materialize a lazy
         # checkpoint), so it materializes the round's checkpoint AND
         # returns the convergence signal in the same job.
-        any_changed = new_labels.filter(F.col("_changed")).count() > 0
-        labels = new_labels.drop("_changed")
-        if not any_changed:
-            break
+        changed = step.filter(F.col("_changed")).count() > 0
+        release_checkpoints(labels)
+        labels = step.drop("_changed")
+
+    contract_rounds = 0
+    if changed:
+        # Star edges (node, label) leave every component as it is: a
+        # node's label is a node of its component. bidir holds each edge
+        # twice; contraction needs it once.
+        graph = bidir.filter(F.col("src") < F.col("dst")).unionByName(
+            labels.select(F.col("node").alias("src"), F.col("cluster_id").alias("dst"))
+        )
+        propagated = labels
+        labels, contract_rounds = _contract(graph.toDF("u", "v"))
+        release_checkpoints(propagated)
+    release_checkpoints(bidir)
+    log.info(
+        "connected_components: propagation_rounds=%d contraction_rounds=%d "
+        "handoff=%s",
+        rounds,
+        contract_rounds,
+        changed,
+    )
     return labels
 
 
@@ -158,21 +177,26 @@ def _small_star(e: DataFrame) -> DataFrame:
 
 
 def connected_components_bigstar(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 40,
+    edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
-    """Alternating large-star/small-star contraction. Same contract as
-    ``connected_components``; O(log n) rounds independent of graph
-    diameter. Convergence when the edge multiset fixpoints, detected
-    via (count, sum(u), sum(v)) — label sums are monotone under both
-    transforms, so the triple is stationary only at the fixpoint."""
+    """Large-star/small-star contraction from the start, with no
+    propagation phase. Same contract as ``connected_components``; kept
+    as a query of its own so the contraction is oracle-checked on a
+    real graph, not only on the handoff."""
     raw = edges.select(
         F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v")
     ).filter(F.col("u").isNotNull() & F.col("v").isNotNull())
+    return _contract(raw)[0]
+
+
+def _contract(raw: DataFrame) -> tuple[DataFrame, int]:
+    """(u, v) edges -> ((node, cluster_id), rounds) by alternating
+    large-star/small-star until the edge set fixpoints, detected via
+    (count, sum(u), sum(v)) — label sums are monotone under both
+    transforms, so the triple is stationary only at the fixpoint. The
+    labels come back materialized, so every intermediate is released."""
     # Self-loop-only nodes are singleton components (same contract as
-    # propagate), so collect the node universe BEFORE dropping loops.
+    # propagation), so collect the node universe BEFORE dropping loops.
     all_nodes = (
         raw.select(F.col("u").alias("node"))
         .union(raw.select(F.col("v").alias("node")))
@@ -185,39 +209,48 @@ def connected_components_bigstar(
         .localCheckpoint(eager=False)
     )
     prev_sig = None
-    for _ in range(max_iter):
-        # Lazy checkpoint materialized by the signature agg below —
-        # one full-scan job per round (see connected_components).
-        e = _small_star(_large_star(e)).localCheckpoint(eager=False)
-        # Sums in decimal(38,0): encoded nodes legitimately reach ~2^63
-        # (encode_edges admits |id| < 2^62), so a long partial sum of
-        # two such nodes already overflows — ARITHMETIC_OVERFLOW under
-        # ANSI, a silently wrong (still fixpoint-safe, but why risk it)
-        # signature without.
-        sig = e.agg(
-            F.count("*").alias("c"),
-            F.sum(F.col("u").cast("decimal(38,0)")).alias("su"),
-            F.sum(F.col("v").cast("decimal(38,0)")).alias("sv"),
-        ).collect()[0]
-        sig = (sig["c"], sig["su"], sig["sv"])
-        if sig == prev_sig:
-            break
-        prev_sig = sig
-    # Fixpoint is a star forest: every non-root points straight at its
-    # component min. Roots appear only on the v side (or not at all for
-    # singleton inputs, excluded upstream).
-    labels = e.groupBy("u").agg(F.min("v").alias("cluster_id")).select(
-        F.col("u").alias("node"), "cluster_id"
-    )
-    roots = all_nodes.join(
-        labels.select("node"), "node", "left_anti"
-    ).withColumn("cluster_id", F.col("node"))
-    return labels.unionByName(roots)
+    try:
+        for rounds in range(1, CONTRACT_ROUNDS + 1):
+            # Lazy checkpoint materialized by the signature agg below —
+            # one full-scan job per round (see connected_components).
+            nxt = _small_star(_large_star(e)).localCheckpoint(eager=False)
+            # Sums in decimal(38,0): encoded nodes legitimately reach
+            # ~2^63 (encode_edges admits |id| < 2^62), so a long partial
+            # sum of two such nodes already overflows —
+            # ARITHMETIC_OVERFLOW under ANSI, a silently wrong (still
+            # fixpoint-safe, but why risk it) signature without.
+            sig = nxt.agg(
+                F.count("*").alias("c"),
+                F.sum(F.col("u").cast("decimal(38,0)")).alias("su"),
+                F.sum(F.col("v").cast("decimal(38,0)")).alias("sv"),
+            ).collect()[0]
+            release_checkpoints(e)
+            e = nxt
+            sig = (sig["c"], sig["su"], sig["sv"])
+            if sig == prev_sig:
+                break
+            prev_sig = sig
+        else:
+            raise RuntimeError(
+                f"connected components: contraction reached its "
+                f"{CONTRACT_ROUNDS}-round cap without a fixpoint"
+            )
+        # Fixpoint is a star forest: every non-root points straight at
+        # its component min. Roots appear only on the v side (or not at
+        # all for singleton inputs, excluded upstream).
+        labels = e.groupBy("u").agg(F.min("v").alias("cluster_id")).select(
+            F.col("u").alias("node"), "cluster_id"
+        )
+        roots = all_nodes.join(
+            labels.select("node"), "node", "left_anti"
+        ).withColumn("cluster_id", F.col("node"))
+        return labels.unionByName(roots).localCheckpoint(eager=True), rounds
+    finally:
+        release_checkpoints(e)
+        release_checkpoints(all_nodes)
 
 
-def cluster_pairs(
-    pairs: DataFrame, threshold: float = 0.95, method: str = "propagate"
-) -> DataFrame:
+def cluster_pairs(pairs: DataFrame, threshold: float = 0.95) -> DataFrame:
     """Match pairs (id_1, id_2, confidence) -> (side, id, cluster_id).
 
     Node namespace: table-A ids map to 2*id, table-B ids to 2*id+1 so
@@ -230,14 +263,7 @@ def cluster_pairs(
     loses precision beyond 2^53 — exactly the range of xxhash64-derived
     doc ids.
     """
-    edges = encode_edges(pairs, threshold)
-    if method == "bigstar":
-        comp = connected_components_bigstar(edges)
-    elif method == "propagate":
-        comp = connected_components(edges)
-    else:
-        raise ValueError(f"unknown clustering method: {method}")
-    return decode_components(comp)
+    return decode_components(connected_components(encode_edges(pairs, threshold)))
 
 
 def encode_edges(pairs: DataFrame, threshold: float) -> DataFrame:

@@ -425,7 +425,6 @@ def dedup_pipeline(
     verify_k: int = 3,
     verify_threshold: float = 0.62,
     max_doc_freq: int | None = 100,
-    method: str = "propagate",
     minhash_hash_fn: str = "xxhash64",
     pins: list | None = None,
     verify_mode: str = "join",
@@ -521,9 +520,7 @@ def dedup_pipeline(
         pins=pins,
         mode=verify_mode,
     )
-    clusters = dedup_clusters(
-        surv, verified.select("id_a", "id_b"), id_col, text_col, method
-    )
+    clusters = dedup_clusters(surv, verified.select("id_a", "id_b"), id_col, text_col)
     cluster_canon = clusters.filter(F.col("is_canonical")).select(
         "cluster_id", F.col(id_col).alias("_near_canon")
     )
@@ -769,7 +766,6 @@ def dedup_clusters(
     pairs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    method: str = "propagate",
 ) -> DataFrame:
     """Near-duplicate clusters with canonical selection — the "keep
     one" step of a training-data dedup pipeline.
@@ -782,15 +778,16 @@ def dedup_clusters(
     (id_col, cluster_id, cluster_size, is_canonical). Docs in no pair
     are implicitly canonical and not returned.
 
-    Scale: the component step is the same O(diameter) propagation /
-    O(log n) bigstar used for entity clusters; canonical selection is
+    Scale: the component step is ``connected_components``, the one
+    used for entity clusters: a few propagation rounds, handing long
+    repost chains to O(log n)-round contraction. Canonical selection is
     one window over cluster_id — clusters are tiny relative to the
     corpus, so no skew concern beyond what AQE handles.
     """
     from pyspark.sql import Window
     from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
 
-    from .clustering import connected_components, connected_components_bigstar
+    from .clustering import connected_components
 
     id_type = docs.schema[id_col].dataType
     if not isinstance(id_type, (ByteType, ShortType, IntegerType, LongType)):
@@ -802,16 +799,7 @@ def dedup_clusters(
             f"(got {id_type.simpleString()}); map string ids to longs "
             "(e.g. xxhash64) upstream"
         )
-    edges = pairs.select(
-        F.col("id_a").cast("long").alias("src"),
-        F.col("id_b").cast("long").alias("dst"),
-    )
-    if method == "bigstar":
-        comp = connected_components_bigstar(edges)
-    elif method == "propagate":
-        comp = connected_components(edges)
-    else:
-        raise ValueError(f"unknown clustering method: {method}")
+    comp = connected_components(pairs, "id_a", "id_b")
 
     lens = docs.select(
         F.col(id_col).cast("long").alias("node"),

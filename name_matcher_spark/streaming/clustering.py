@@ -32,6 +32,7 @@ from ..operators.clustering import (
     connected_components,
     decode_components,
     encode_edges,
+    release_checkpoints,
 )
 
 
@@ -109,6 +110,7 @@ def apply_cluster_batch(
         edges = new_edges
     comp = connected_components(edges)
     comp.write.mode("overwrite").parquet(tmp)
+    release_checkpoints(comp)
     # Atomic replace: a reader (or a retry) sees either the old or
     # the new complete store, never a half-written one. A crash
     # between the two renames leaves only .old — recover_store

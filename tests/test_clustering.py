@@ -2,12 +2,14 @@
 
 from __future__ import annotations
 
+import logging
 import random
 
 import pytest
 
 from name_matcher_spark.fixtures.pages import make_pages
 from name_matcher_spark.fixtures.persons import make_dirty
+from name_matcher_spark.operators import clustering
 from name_matcher_spark.operators.clustering import (
     cluster_pairs,
     connected_components,
@@ -34,13 +36,6 @@ def _uf_components(edges: list[tuple[int, int]]) -> set[frozenset[int]]:
     comps: dict[int, set[int]] = {}
     for n in parent:
         comps.setdefault(find(n), set()).add(n)
-    return {frozenset(v) for v in comps.values()}
-
-
-def _spark_components(df) -> set[frozenset[int]]:
-    comps: dict[int, set[int]] = {}
-    for r in df.collect():
-        comps.setdefault(r.cluster_id, set()).add(r.node)
     return {frozenset(v) for v in comps.values()}
 
 
@@ -78,7 +73,7 @@ def test_cluster_pairs_namespaces(spark):
     assert got == {("a", 1, 2), ("b", 7, 2), ("a", 2, 2)}
 
 
-@pytest.mark.parametrize(
+ADVERSARIAL = pytest.mark.parametrize(
     "name,edges",
     [
         ("basic", [(1, 2), (2, 3), (10, 11), (5, 5)]),
@@ -93,31 +88,142 @@ def test_cluster_pairs_namespaces(spark):
         ]),
     ],
 )
+
+
+def _assert_union_find_components(comp, edges) -> None:
+    comps: dict[int, set[int]] = {}
+    for r in comp.collect():
+        comps.setdefault(r.cluster_id, set()).add(r.node)
+    assert {frozenset(v) for v in comps.values()} == _uf_components(edges)
+    # cluster ids are the component minimum, the contract of both phases
+    assert all(cid == min(members) for cid, members in comps.items())
+
+
+@ADVERSARIAL
 def test_bigstar_matches_union_find(spark, name, edges):
-    """Large-star/small-star (the O(log n)-round scale path) against a
-    driver-side union-find on adversarial shapes — including a
-    120-deep chain, where plain propagation needs O(diameter) rounds."""
+    """Large-star/small-star from the start (the O(log n)-round scale
+    path) against a driver-side union-find on adversarial shapes —
+    including a 120-deep chain, where plain propagation needs
+    O(diameter) rounds."""
     df = spark.createDataFrame(edges, ["src", "dst"])
-    got = _spark_components(connected_components_bigstar(df))
-    want = _uf_components(edges)
-    assert got == want
-    # cluster ids are the component minimum (same convention as
-    # propagate, so the two methods are interchangeable downstream)
-    for r in connected_components_bigstar(df).collect():
-        assert r.cluster_id <= r.node
+    _assert_union_find_components(connected_components_bigstar(df), edges)
 
 
-def test_cluster_pairs_methods_agree(spark):
+@ADVERSARIAL
+def test_handoff_matches_union_find(spark, monkeypatch, name, edges):
+    """The same shapes through ``connected_components`` with the
+    handoff forced: propagation runs no round, and contraction starts
+    from the 1-hop labels as star edges next to the graph."""
+    monkeypatch.setattr(clustering, "PROPAGATE_ROUNDS", 0)
+    df = spark.createDataFrame(edges, ["src", "dst"])
+    _assert_union_find_components(connected_components(df), edges)
+
+
+def test_cluster_pairs_contraction_path_agrees(spark, monkeypatch):
     pairs = spark.createDataFrame(
         [(1, 7, 1.0), (2, 7, 1.0), (3, 9, 0.99), (4, 9, 0.99), (6, 2, 1.0)],
         ["id_1", "id_2", "confidence"],
     )
     a = {(r.side, r.id, r.cluster_id) for r in cluster_pairs(pairs).collect()}
-    b = {
-        (r.side, r.id, r.cluster_id)
-        for r in cluster_pairs(pairs, method="bigstar").collect()
-    }
+    monkeypatch.setattr(clustering, "PROPAGATE_ROUNDS", 0)
+    b = {(r.side, r.id, r.cluster_id) for r in cluster_pairs(pairs).collect()}
     assert a == b
+
+
+def _chain_clusters(spark, tmp_path, n: int, entry: str) -> dict[int, int]:
+    """A path of ``n`` nodes through one clustering entry point ->
+    {node: cluster_id}, nodes numbered 1..n along the path."""
+    if entry == "dedup_clusters":
+        from name_matcher_spark.operators.dedup import dedup_clusters
+
+        docs = spark.createDataFrame(
+            [(i, f"doc {i}") for i in range(1, n + 1)], "doc_id long, text string"
+        )
+        pairs = spark.createDataFrame(
+            [(i, i + 1) for i in range(1, n)], "id_a long, id_b long"
+        )
+        return {r.doc_id: r.cluster_id for r in dedup_clusters(docs, pairs).collect()}
+    # Alternate sides along the path: a1-b1-a2-b2-... Node k (1-based)
+    # is a_{(k+1)//2} for odd k and b_{k//2} for even k; the smallest
+    # encoded node is a1 = 2.
+    pairs = spark.createDataFrame(
+        [((k + 1) // 2 + (k % 2 == 0), (k + 1) // 2, 1.0) for k in range(1, n)],
+        "id_1 long, id_2 long, confidence double",
+    )
+    if entry == "cluster_pairs":
+        rows = cluster_pairs(pairs).collect()
+    else:
+        from name_matcher_spark.streaming.clustering import (
+            apply_cluster_batch,
+            read_clusters,
+        )
+
+        store = str(tmp_path / "labels")
+        apply_cluster_batch(pairs, store)
+        rows = read_clusters(spark, store).collect()
+    return {2 * r.id - (r.side == "a"): r.cluster_id for r in rows}
+
+
+@pytest.mark.parametrize("entry", ["cluster_pairs", "dedup_clusters", "stream_store"])
+@pytest.mark.parametrize("n", [40, 60, 200])
+def test_long_chain_is_one_component(spark, tmp_path, n, entry):
+    """Chains longer than the propagation phase hand off to contraction
+    and still come back as ONE component labeled with its smallest
+    node, through every production caller."""
+    got = _chain_clusters(spark, tmp_path, n, entry)
+    assert sorted(got) == list(range(1, n + 1))
+    smallest = 1 if entry == "dedup_clusters" else 2
+    assert set(got.values()) == {smallest}
+
+
+def test_contraction_cap_raises(spark, monkeypatch):
+    """Contraction never exits quietly: reaching its round cap without
+    a fixpoint is an error, not a partial labeling."""
+    monkeypatch.setattr(clustering, "CONTRACT_ROUNDS", 1)
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 200)], "src long, dst long"
+    )
+    with pytest.raises(RuntimeError, match="round cap"):
+        connected_components(edges)
+
+
+def test_components_release_their_round_checkpoints(spark):
+    """Only the returned labels stay persisted: every superseded
+    round's checkpoint and the edge table are released, whether the
+    call converged by propagation or handed off to contraction."""
+    sc = spark.sparkContext
+
+    def stored() -> set[int]:
+        # RDD ids, so that older entries the context cleaner drops
+        # meanwhile cannot offset new ones
+        return {info.id() for info in sc._jsc.sc().getRDDStorageInfo()}
+
+    held = []
+    for n in (20, 200):
+        before = stored()
+        chain = [(i, i + 1) for i in range(1, n)]
+        comp = connected_components(spark.createDataFrame(chain, "src long, dst long"))
+        assert comp.count() == n
+        held.append(comp)
+        assert len(stored() - before) <= 3, n
+
+
+def test_components_log_rounds_and_handoff(spark, caplog):
+    caplog.set_level(logging.INFO, logger=clustering.__name__)
+    schema = "src long, dst long"
+    star = spark.createDataFrame([(1, i) for i in range(2, 30)], schema)
+    chain = spark.createDataFrame([(i, i + 1) for i in range(1, 40)], schema)
+    for edges, handoff in ((star, False), (chain, True)):
+        caplog.clear()
+        connected_components(edges).count()
+        (rec,) = [r for r in caplog.records if r.name == clustering.__name__]
+        msg = rec.getMessage()
+        assert f"handoff={handoff}" in msg
+        if handoff:
+            assert f"propagation_rounds={clustering.PROPAGATE_ROUNDS}" in msg
+            assert "contraction_rounds=0" not in msg
+        else:
+            assert "contraction_rounds=0" in msg
 
 
 def test_extraction_byte_identical(spark):

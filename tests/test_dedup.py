@@ -108,7 +108,8 @@ def test_simhash_plan_is_jvm_only(docs):
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
-def test_dedup_clusters_transitive_and_canonical(spark):
+def test_dedup_clusters_transitive_and_canonical(spark, monkeypatch):
+    from name_matcher_spark.operators import clustering
     from name_matcher_spark.operators.dedup import dedup_clusters
 
     d = spark.createDataFrame(
@@ -126,8 +127,10 @@ def test_dedup_clusters_transitive_and_canonical(spark):
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (5, 6)], "id_a long, id_b long"
     )
-    for method in ("propagate", "bigstar"):
-        rows = {r.doc_id: r for r in dedup_clusters(d, pairs, method=method).collect()}
+    # Propagation, then the contraction path (the handoff forced).
+    for rounds in (clustering.PROPAGATE_ROUNDS, 0):
+        monkeypatch.setattr(clustering, "PROPAGATE_ROUNDS", rounds)
+        rows = {r.doc_id: r for r in dedup_clusters(d, pairs).collect()}
         assert set(rows) == {1, 2, 3, 5, 6}  # doc 4 untouched
         assert rows[1].cluster_id == rows[2].cluster_id == rows[3].cluster_id
         assert rows[1].cluster_size == 3

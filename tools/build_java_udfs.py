@@ -63,6 +63,7 @@ import shutil
 import subprocess
 import sys
 import tempfile
+import zipfile
 from pathlib import Path
 
 PKG = Path(__file__).resolve().parents[1] / "name_matcher_spark" / "javaudf"
@@ -82,14 +83,28 @@ def spark_jars_classpath() -> str:
     raise RuntimeError("cannot locate Spark jars for javac classpath")
 
 
+def _jar_is_current(sources: list[Path]) -> bool:
+    """The jar is newer than every source AND holds exactly one
+    top-level class per source, so a deleted kernel's class does not
+    outlive its source in an existing jar."""
+    newest_src = max(s.stat().st_mtime for s in sources)
+    if not JAR.exists() or JAR.stat().st_mtime < newest_src:
+        return False
+    with zipfile.ZipFile(JAR) as zf:
+        classes = {
+            n[len("nms/"):-len(".class")]
+            for n in zf.namelist()
+            if n.startswith("nms/") and n.endswith(".class") and "$" not in n
+        }
+    return classes == {s.stem for s in sources}
+
+
 def build(force: bool = False) -> Path | None:
     sources = sorted(PKG.glob("*.java"))
     if not sources:
         return None
-    if JAR.exists() and not force:
-        newest_src = max(s.stat().st_mtime for s in sources)
-        if JAR.stat().st_mtime >= newest_src:
-            return JAR
+    if not force and _jar_is_current(sources):
+        return JAR
     javac = shutil.which("javac")
     jar_tool = shutil.which("jar")
     if not javac:
@@ -108,8 +123,6 @@ def build(force: bool = False) -> Path | None:
                 capture_output=True,
             )
         else:  # zip fallback — a jar IS a zip
-            import zipfile
-
             with zipfile.ZipFile(JAR, "w") as zf:
                 for root, _, files in os.walk(tmp):
                     for f in files:
